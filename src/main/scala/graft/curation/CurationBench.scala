@@ -151,8 +151,9 @@ object CurationBench {
     Curator.curateFresh(syntheticRecords(spark, math.min(n, 100), partial = false))
       .rows.count()
     val t0 = System.nanoTime()
-    // triples emission consumes every frame again — checkpoint so the
-    // curation DAG executes once (same as the update path)
+    // materialize reads every CSV frame and emission reads the graph
+    // frames, some twice: checkpointed checkpoints each frame on its first
+    // read, so each curation DAG executes once (same as the update path)
     val fresh = Curator.curateFresh(freshInput).checkpointed
     materialize(fresh)
     val triples = TriplesEmitter.emit(fresh)

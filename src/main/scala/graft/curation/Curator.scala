@@ -47,35 +47,57 @@ object Curator {
     *  - raNames(ra_meta, name) — "Family, Given" or org name
     *  - pages(br_meta, re_meta, start_page, end_page)
     *  - partOf(child_meta, parent_meta)
+    *
+    * Every field is a lazy val over a by-name constructor argument,
+    * evaluated the first time a caller reads the field and never when
+    * nobody does: this is what lets `checkpointed` defer each checkpoint.
     */
-  final case class CuratedBatch(
-      rows: DataFrame,
-      indexIdBr: DataFrame,
-      indexIdRa: DataFrame,
-      arIndex: DataFrame,
-      reIndex: DataFrame,
-      vviIndex: DataFrame,
-      entities: DataFrame,
-      entityIds: DataFrame,
-      roles: DataFrame,
-      raNames: DataFrame,
-      pages: DataFrame,
-      partOf: DataFrame,
-      /** explicit `omid:` references carried by venue/agent cells
-        * (owner_meta, ref) — unresolvable in a fresh world (D2(2)
-        * discards them) but the store-adoption key for StoreCurator. */
-      explicitRefs: DataFrame,
-      /** J6 per-row propagation feed (br_meta, row_idx, date, type2,
-        * vol3, iss3, br_ids, explicit_omid): the fresh collapse keeps
-        * last-row values (merge_duplicate_entities is donor-gated,
-        * curator.py:1374, and fresh batches have no resolved donors),
-        * but StoreCurator needs each row's cleaned fields plus its own
-        * resolution keys to decide which rows may donate. */
-      rowProp: DataFrame) {
-    /** Every frame localCheckpoint'ed — callers that consume the batch
-      * more than once use this so the curation DAG executes exactly once
-      * (see the graft-driver-contract checkpoint discipline). */
-    def checkpointed: CuratedBatch = CuratedBatch(
+  final class CuratedBatch private (
+      rows0: => DataFrame,
+      indexIdBr0: => DataFrame,
+      indexIdRa0: => DataFrame,
+      arIndex0: => DataFrame,
+      reIndex0: => DataFrame,
+      vviIndex0: => DataFrame,
+      entities0: => DataFrame,
+      entityIds0: => DataFrame,
+      roles0: => DataFrame,
+      raNames0: => DataFrame,
+      pages0: => DataFrame,
+      partOf0: => DataFrame,
+      explicitRefs0: => DataFrame,
+      rowProp0: => DataFrame) {
+    lazy val rows: DataFrame = rows0
+    lazy val indexIdBr: DataFrame = indexIdBr0
+    lazy val indexIdRa: DataFrame = indexIdRa0
+    lazy val arIndex: DataFrame = arIndex0
+    lazy val reIndex: DataFrame = reIndex0
+    lazy val vviIndex: DataFrame = vviIndex0
+    lazy val entities: DataFrame = entities0
+    lazy val entityIds: DataFrame = entityIds0
+    lazy val roles: DataFrame = roles0
+    lazy val raNames: DataFrame = raNames0
+    lazy val pages: DataFrame = pages0
+    lazy val partOf: DataFrame = partOf0
+    /** explicit `omid:` references carried by venue/agent cells
+      * (owner_meta, ref) — unresolvable in a fresh world (D2(2)
+      * discards them) but the store-adoption key for StoreCurator. */
+    lazy val explicitRefs: DataFrame = explicitRefs0
+    /** J6 per-row propagation feed (br_meta, row_idx, date, type2,
+      * vol3, iss3, br_ids, explicit_omid): the fresh collapse keeps
+      * last-row values (merge_duplicate_entities is donor-gated,
+      * curator.py:1374, and fresh batches have no resolved donors),
+      * but StoreCurator needs each row's cleaned fields plus its own
+      * resolution keys to decide which rows may donate. */
+    lazy val rowProp: DataFrame = rowProp0
+
+    /** Each frame localCheckpoint'ed on its first read, and only once —
+      * callers that consume a frame more than once use this so its
+      * curation DAG executes exactly once (see the graft-driver-contract
+      * checkpoint discipline). Calling it starts no job, and a frame no
+      * caller reads is never planned or run: a MetaProcess file that
+      * only emits the graph skips the CSV rows and the index tables. */
+    def checkpointed: CuratedBatch = new CuratedBatch(
       rows.localCheckpointClamped(), indexIdBr.localCheckpointClamped(),
       indexIdRa.localCheckpointClamped(), arIndex.localCheckpointClamped(),
       reIndex.localCheckpointClamped(), vviIndex.localCheckpointClamped(),
@@ -83,6 +105,18 @@ object Curator {
       roles.localCheckpointClamped(), raNames.localCheckpointClamped(),
       pages.localCheckpointClamped(), partOf.localCheckpointClamped(),
       explicitRefs.localCheckpointClamped(), rowProp.localCheckpointClamped())
+  }
+
+  object CuratedBatch {
+    def apply(rows: => DataFrame, indexIdBr: => DataFrame,
+        indexIdRa: => DataFrame, arIndex: => DataFrame, reIndex: => DataFrame,
+        vviIndex: => DataFrame, entities: => DataFrame,
+        entityIds: => DataFrame, roles: => DataFrame, raNames: => DataFrame,
+        pages: => DataFrame, partOf: => DataFrame,
+        explicitRefs: => DataFrame, rowProp: => DataFrame): CuratedBatch =
+      new CuratedBatch(rows, indexIdBr, indexIdRa, arIndex, reIndex,
+        vviIndex, entities, entityIds, roles, raNames, pages, partOf,
+        explicitRefs, rowProp)
   }
 
   /** S1 — CSV scan (file_manager.py:99-120): 11 string columns, header,
@@ -247,8 +281,6 @@ object Curator {
       .select(struct($"venue_ent", $"vol_seq", $"iss_seq").as("ik"), $"first_row")
 
     val brEnts = rowComps.unionByName(newVenues)
-    val brNumbered = batchSeq(brEnts,
-      Seq($"phase", $"k1", $"k2"), "pre_n", 0L).select($"ent", $"pre_n", $"phase", $"k1", $"k2")
     // volumes/issues interleave with venues in phase 1 by (first_row, slot):
     // renumber all BR-kind entities together for final ids.
     val volKeyed = newVols.select(lit(null).cast("long").as("ent"), $"vk",

@@ -141,10 +141,12 @@ object MetaProcess {
       n: org.apache.spark.sql.Column) =
     concat(lit(Vocab.BaseIri + "/"), entity, lit("/prov/se/"), n)
 
-  private def countersOf(b: Curator.CuratedBatch, prefix: String,
+  /** Advance the per-kind counters past the batch's minted metas (a
+    * one-column frame of entity metas). */
+  private def countersOf(metas: DataFrame, prefix: String,
       prev: Map[String, Long]): Map[String, Long] = {
     val batchMax = graft.operators.Tools
-      .regenerateCounters(Provenance.allEntities(b), prefix)
+      .regenerateCounters(metas, prefix)
       .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
     (prev.keySet ++ batchMax.keySet).map { k =>
       k -> math.max(prev.getOrElse(k, 0L), batchMax.getOrElse(k, 0L))
@@ -208,13 +210,17 @@ object MetaProcess {
       val input = Curator.readInput(spark, f)
       st = (st.triples, st.prov) match {
         case (None, _) =>
+          // each curated frame is checkpointed on its first read: emission
+          // and provenance read the graph frames only, so the CSV rows
+          // and index tables of the batch are never built
           val b = Curator.curateFresh(input, prefix).checkpointed
           val t = TriplesEmitter.emit(b).localCheckpointClamped()
           val p = Provenance.freshSnapshots(b, generatedAt).localCheckpointClamped()
           // fresh world: the whole batch is the delta (insert-only)
           sink.foreach(emitSinks(_, sinkName(f), t, t, t.limit(0), p))
+          // one snapshot per minted entity: p is allEntities(b), checkpointed
           PipelineState(Some(t), Some(p),
-            countersOf(b, prefix, st.counters),
+            countersOf(p.select($"entity"), prefix, st.counters),
             st.done + f)
         case (Some(oldTriples), Some(oldProv)) =>
           val store = StoreViews.fromTriples(oldTriples, prefix)
@@ -269,7 +275,8 @@ object MetaProcess {
               provDelta)
           }
           PipelineState(Some(newTriples), Some(newProv),
-            countersOf(b, prefix, st.counters), st.done + f)
+            countersOf(Provenance.allEntities(b), prefix, st.counters),
+            st.done + f)
         case _ =>
           throw new IllegalStateException("state has triples but no prov")
       }

@@ -62,8 +62,8 @@ object StoreCurator {
     val spark = input.sparkSession
     import spark.implicits._
 
-    // Phase 1: fresh curation in the temp number space. Every frame is
-    // consumed several times below — checkpoint once.
+    // Phase 1: fresh curation in the temp number space. Frames are
+    // consumed several times below — each is checkpointed on first read.
     val fresh = Curator.curateFresh(input, prefix, numberOffset = TempBase,
       normalizeTitles = normalizeTitles).checkpointed
 
