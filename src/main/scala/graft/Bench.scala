@@ -1,30 +1,7 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 object Bench {
-  /** Accumulates per-stage executor metrics between resets so each query's
-    * JSON row carries its spill/shuffle/peak-memory profile — added after
-    * the round-5 q31/q32 bench variance (5x run-to-run swing) was
-    * suspected to be storage-pressure-driven but undiagnosable from wall
-    * times alone. */
-  private class MetricsListener extends SparkListener {
-    @volatile var spillMem = 0L
-    @volatile var spillDisk = 0L
-    @volatile var shuffleWrite = 0L
-    @volatile var peakExecMem = 0L
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        spillMem += m.memoryBytesSpilled
-        spillDisk += m.diskBytesSpilled
-        shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-        peakExecMem = math.max(peakExecMem, m.peakExecutionMemory)
-      }
-    }
-    def reset(): Unit = { spillMem = 0L; spillDisk = 0L; shuffleWrite = 0L; peakExecMem = 0L }
-  }
-
   /** 1-minute system load average, or -1 where the JVM can't read it —
     * stamped into the artifact so a noisy refresh (loaded sandbox) is
     * distinguishable from a real regression without an A/B re-run. */
@@ -74,8 +51,11 @@ object Bench {
     // so every pre-line WARN (cache-already-cached etc.) eats budget the
     // final contract line needs
     spark.sparkContext.setLogLevel("ERROR")
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    // per-stage executor metrics between resets, so each query's JSON row
+    // carries its spill/shuffle/peak-memory profile — added after the
+    // round-5 q31/q32 bench variance (5x run-to-run swing) was suspected
+    // to be storage-pressure-driven but undiagnosable from wall times alone
+    val listener = graft.obs.StageMetrics.on(spark.sparkContext)
     // Warmup outside the timed region: one trivial count per input table
     // plus one small query, so parquet footers, filesystem metadata, and
     // the first round of JIT/codegen compilation don't land on whichever

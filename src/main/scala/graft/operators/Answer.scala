@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * above the last exchange a SECOND time. For the quadratic verify stages
   * that means re-paying the whole candidate join + kernel pass: measured
   * at sf0.1, q19 6.9 s -> 16.1 s, q21 6.6 s -> 12.6 s, q34 2.9 s -> 5.1 s
-  * once the trailing orderBy is attached (PerfProbe, r18).
+  * once the trailing orderBy is attached (r18 per-query decomposition).
   *
   * Fix (guide §3.3 "materialise an intermediate result"): eagerly
   * localCheckpoint the ANSWER rows — post-filter, orders of magnitude
@@ -29,13 +29,12 @@ import org.apache.spark.sql.{Column, DataFrame}
   * OPTIMIZATION_r18.md).
   */
 object Answer {
-  /** Plan-audit bypass (SPEC-ONLY, the [[Dedup.sliceReceiptHook]]
-    * pattern): the eager checkpoint truncates the inspectable plan to a
-    * `Scan ExistingRDD`, so specs that walk the executed plan for the
-    * working operators (join strategy, window shape, fan-out exchange)
-    * flip this to audit the un-truncated pipeline. The bypassed plan is
-    * operator-for-operator the pipeline the checkpoint materializes;
-    * production paths never set it. */
+  /** Plan-audit bypass (SPEC-ONLY): the eager checkpoint truncates the
+    * inspectable plan to a `Scan ExistingRDD`, so specs that walk the
+    * executed plan for the working operators (join strategy, window
+    * shape, fan-out exchange) flip this to audit the un-truncated
+    * pipeline. The bypassed plan is operator-for-operator the pipeline
+    * the checkpoint materializes; production paths never set it. */
   @volatile private[graft] var planAuditBypass: Boolean = false
 
   def sorted(df: DataFrame, cols: Column*): DataFrame =

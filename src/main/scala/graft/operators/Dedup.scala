@@ -228,19 +228,6 @@ object Dedup {
     jaccardVerify(cand, sets, threshold, nDocs)
   }
 
-  /** Exact Jaccard for candidate pairs via two joins against the hashed
-    * shingle sets; used as the verify stage by both the exact and LSH
-    * paths (and by TextQueries.q22's LSH-fronted bibliographic match).
-    * The kernel is the native sorted-merge intersection count over the
-    * pre-sorted hash arrays with |union| derived as n1 + n2 - i —
-    * measured ~2.5x faster than array_intersect + array_union on q22's
-    * 4M-candidate verify, which is the stage that dominates the
-    * LSH-fronted match. The join sides shuffle 8 B/shingle (the hash
-    * arrays) — no shingle strings exist anywhere in the pipeline.
-    *
-    * `nDocs` is the caller's one cached count of `sets` (every caller
-    * caches + counts once to materialize); taking it as a parameter keeps
-    * this from launching an extra job per invocation. */
   /** Below this doc count the hashed-set side broadcasts (a few tens of
     * MB); above it the verify joins stay shuffle-hash. */
   private val VerifyBroadcastMaxDocs = 250000L
@@ -306,7 +293,21 @@ object Dedup {
     else if (statsAreMeasured(sets)) measuredBytes(sets)
     else BigInt(VerifyBroadcastMaxBytes)
 
-  /** @param sorted emit pairs ordered by (d1, d2) — callers that register
+  /** Exact Jaccard for candidate pairs via two joins against the hashed
+    * shingle sets; used as the verify stage by both the exact and LSH
+    * paths (and by TextQueries.q22's LSH-fronted bibliographic match).
+    * The kernel is the native sorted-merge intersection count over the
+    * pre-sorted hash arrays with |union| derived as n1 + n2 - i —
+    * measured ~2.5x faster than array_intersect + array_union on q22's
+    * 4M-candidate verify, which is the stage that dominates the
+    * LSH-fronted match. The join sides shuffle 8 B/shingle (the hash
+    * arrays) — no shingle strings exist anywhere in the pipeline.
+    *
+    * `nDocs` is the caller's one cached count of `sets` (every caller
+    * caches + counts once to materialize); taking it as a parameter keeps
+    * this from launching an extra job per invocation.
+    *
+    * @param sorted emit pairs ordered by (d1, d2) — callers that register
     *   the pair set directly need the deterministic order; funnel callers
     *   (q22) that keep joining/re-sorting downstream pass false and skip
     *   a full mid-pipeline sort exchange of the pair stream. */
@@ -648,38 +649,38 @@ object Dedup {
       |  round(jac, 6) AS jac
       |FROM j WHERE jac >= 0.8 ORDER BY new_id, other_id""".stripMargin
 
-  /** Banded-MinHash candidate pairs from a (doc_id, sh) shingle frame:
-    * signature of bands*rows permutations, one bucket hash per band
-    * (xxhash64 of the band's row slice, salted by the band index), then
-    * a SHUFFLE-HASH self-equi-join on (band, bucket). Two measured
-    * plan choices (sf0.1, local[32], from a materialized band table):
-    * shuffle-hash 4.3 s vs sort-merge 15.9 s (sorting 2x docs*bands rows
-    * dominates) vs groupBy + in-bucket pair expansion 10.2 s (the
-    * higher-order-function lambdas are interpreted, not codegen'd) — so
-    * the band table is checkpointed once (it is O(docs * bands) narrow
-    * rows, and feeding both join sides from it stops the signature
-    * subtree from being computed twice) and joined with the
-    * shuffle_hash hint. Detection probability for a pair with Jaccard J
-    * is 1-(1-J^rows)^bands; shuffle volume is O(docs * bands) rows
-    * regardless of corpus size. Shared by the document-dedup path (q32)
-    * and the LSH-fronted bibliographic match (q22). (r18 tried to retire
-    * the checkpoint in favor of exchange reuse between the self-join's
-    * two repartition sides and REVERTED it: the two exchanges never
-    * collapse — distinct plan_ids under AQE even though the subtrees
-    * canonicalize equal — so without the checkpoint the signature
-    * subtree computes once per side. The checkpoint stays load-bearing;
-    * see [[bandedSignatures]].) */
-  /** The (doc_id, band, bh) table: signature of bands*rows permutations,
-    * one bucket hash per band (xxhash64 of the band's row slice, salted by
-    * the band index). Base hashes are a per-element pmod over the
-    * already-hashed shingle array — cheap enough to inline into the
-    * signature projection. */
   /** Array of `bands` 64-bit band keys from a minhash signature: band b's
     * key hashes signature rows [b*rows, (b+1)*rows) salted with b. */
   private[graft] def bandKeys(sig: Column, bands: Int, rows: Int): Column =
     transform(sequence(lit(0), lit(bands - 1)),
       b => xxhash64(slice(sig, b * lit(rows) + lit(1), lit(rows)), b))
 
+  /** The banded (doc_id, bh) frame of the Banded-MinHash candidate
+    * funnel: signature of bands*rows permutations (base hashes are a
+    * per-element pmod over the already-hashed shingle array, cheap enough
+    * to inline into the signature projection), one bucket hash per band
+    * (xxhash64 of the band's row slice, salted by the band index), then
+    * a SHUFFLE-HASH self-equi-join on bh. Two measured plan choices
+    * (sf0.1, local[32], from a materialized band table): shuffle-hash
+    * 4.3 s vs sort-merge 15.9 s (sorting 2x docs*bands rows dominates)
+    * vs groupBy + in-bucket pair expansion 10.2 s (the higher-order-
+    * function lambdas are interpreted, not codegen'd) — so the band
+    * table is checkpointed once (it is O(docs * bands) narrow rows, and
+    * feeding both join sides from it stops the signature subtree from
+    * being computed twice) and joined with the shuffle_hash hint.
+    * Detection probability for a pair with Jaccard J is
+    * 1-(1-J^rows)^bands; shuffle volume is O(docs * bands) rows
+    * regardless of corpus size. Shared by the document-dedup path (q32)
+    * and the LSH-fronted bibliographic match (q22).
+    *
+    * CONTRACT — consumers MUST exact-verify: the band index is folded
+    * into bh, not kept as a column, so a join on bh alone also pairs two
+    * docs whose bucket hashes collide ACROSS bands (p = 2^-64 per row
+    * pair). A bh match is therefore a candidate, never an answer: every
+    * consumer must exact-verify (Jaccard, score filter) and distinct the
+    * pairs it takes from this frame. OperatorsSpec "band-group-sliced
+    * candidate generation equals the single-piece frame" pins the
+    * bh-only pair set against the (band, bh)-keyed sliced shape. */
   private def bandedSignatures(sets: DataFrame, bands: Int, rows: Int): DataFrame = {
     import sets.sparkSession.implicits._
     // STILL checkpointed after the r18 probe (re-confirmed r19, ~2.7x):
@@ -709,20 +710,22 @@ object Dedup {
       .localCheckpoint()
   }
 
-  /** Banded rows for bands [lo, hi) ONLY of the full (bands, rows)
-    * operating point: the affine-permutation table is sliced, so the
-    * minhash kernel computes exactly this slice's hashes (total CPU
-    * across all slices == one full-signature pass; the only repeated
-    * work is re-iterating each doc's base-hash array once per slice).
-    * Band keys/seeds use ABSOLUTE band indices, so the union over slices
-    * is row-identical to [[bandedSignatures]] of the full point. */
-  /** Banded frame for bands [lo, hi), each row ALSO carrying the doc's
-    * PREVIOUS band's bucket hash (`bhp`): the signature is computed from
-    * band lo-1 on (one extra band of rows), so `bhp` is exact across
-    * slice boundaries. Band 0 has no predecessor — its `bhp` is a
-    * constant the join's `band === 0` arm ignores. The extra column is
-    * 8 B/row on the band exchange; it buys the chained first-collision
-    * suppression in [[lshCandidatePairsSliced]]'s join. */
+  /** Banded (doc_id, band, bh, bhp) rows for bands [lo, hi) ONLY of the
+    * full (bands, rows) operating point: the affine-permutation table is
+    * sliced, so the minhash kernel computes exactly this slice's hashes
+    * (total CPU across all slices == one full-signature pass; the only
+    * repeated work is re-iterating each doc's base-hash array once per
+    * slice). Band keys/seeds use ABSOLUTE band indices, so the union over
+    * slices has the same bucket hashes as [[bandedSignatures]] of the
+    * full point.
+    *
+    * Each row ALSO carries the doc's PREVIOUS band's bucket hash (`bhp`):
+    * the signature is computed from band lo-1 on (one extra band of
+    * rows), so `bhp` is exact across slice boundaries. Band 0 has no
+    * predecessor — its `bhp` is a constant the join's `band === 0` arm
+    * ignores. The extra column is 8 B/row on the band exchange; it buys
+    * the chained first-collision suppression in
+    * [[sliceCandidatePairsOnce]]'s join. */
   private def bandedSignaturesSlice(sets: DataFrame, bands: Int, rows: Int,
       lo: Int, hi: Int): DataFrame = {
     import sets.sparkSession.implicits._
@@ -822,11 +825,9 @@ object Dedup {
     math.max(16000000L, math.min(MaxBandedRowsPerPass, usable / (8L * 32L)))
   }
 
-  private[operators] def lshCandidatePairs(sets: DataFrame, bands: Int, rows: Int): DataFrame =
-    lshCandidatePairsSliced(sets, bands, rows, maxBandedRowsForDisk(sets.sparkSession))
-
-  /** [[lshCandidatePairs]] with the caller's verify stage pushed inside
-    * each band-group slice (see `refine` on [[lshCandidatePairsSliced]]).
+  /** [[lshCandidatePairsSliced]] at the envelope the node's free disk
+    * affords ([[maxBandedRowsForDisk]]), with the caller's verify stage
+    * pushed inside each band-group slice (see `refine` there).
     * Production funnels (q22, q32) pass their exact-Jaccard verify here
     * so the per-slice spill — and the cross-slice dedup exchange — is
     * answer-mass-sized. Below the envelope this composes identically to
@@ -837,6 +838,28 @@ object Dedup {
       nDocsKnown: Long = -1L): DataFrame =
     lshCandidatePairsSliced(sets, bands, rows,
       maxBandedRowsForDisk(sets.sparkSession), refine, nDocsKnown)
+
+  /** ONE band-group slice's candidate pairs, computed independently of
+    * every other slice: banded signatures for bands [lo, hi) (with the
+    * run-start suppression predicate evaluated against the GLOBAL band
+    * index, so a collision run that started before `lo` emits nothing
+    * here — its start slice owns the emission), the caller's refine per
+    * occurrence, then a post-exchange distinct. Slices are therefore
+    * independent jobs whose union-distinct equals the sequential sliced
+    * result — asserted in OperatorsSpec ("band slices are independent"). */
+  private[graft] def sliceCandidatePairsOnce(sets: DataFrame, bands: Int,
+      rows: Int, lo: Int, hi: Int, parts: Int,
+      refine: DataFrame => DataFrame = identity): DataFrame = {
+    import sets.sparkSession.implicits._
+    val keyed = bandedSignaturesSlice(sets, bands, rows, lo, hi)
+      .repartition(parts, $"band", $"bh")
+    val occurrences = keyed.as("a").hint("shuffle_hash").join(keyed.as("b"),
+        $"a.band" === $"b.band" && $"a.bh" === $"b.bh" &&
+          $"a.doc_id" < $"b.doc_id" &&
+          ($"a.band" === 0 || $"a.bhp" =!= $"b.bhp"))
+      .select($"a.doc_id".as("d1"), $"b.doc_id".as("d2"))
+    dedupPairs(refine(occurrences), parts, "d1", "d2")
+  }
 
   /** LSH candidate pairs with the banded frame bounded per pass. The
     * band-group decomposition is loss-free AND exact: a pair's candidacy
@@ -863,15 +886,15 @@ object Dedup {
     *
     * Peak disk is therefore ONE slice's (answer-shaped) exchanges + the
     * answer parquet, held exactly once by the incremental anti-join. The
-    * spill directory is deleted as soon as the final read materializes
-    * (eager localCheckpoint of the answer-mass pair set). On a cluster
-    * the band slices remain sequential rounds of independent shuffles;
-    * the synchronous reclamation is driver-coordinated and works the
-    * same there (the cleaner broadcasts removals to every block
-    * manager). Caveat: ids created by CONCURRENT jobs inside the
-    * snapshot window would be reclaimed too — their stages would
-    * recompute (correctness unaffected); this operator assumes the
-    * serial batch context it runs in.
+    * spill directory is a temp dir, deleted as soon as the final read
+    * materializes (eager localCheckpoint of the answer-mass pair set).
+    * On a cluster the band slices remain sequential rounds of
+    * independent shuffles; the synchronous reclamation is
+    * driver-coordinated and works the same there (the cleaner broadcasts
+    * removals to every block manager). Caveat: ids created by CONCURRENT
+    * jobs inside the snapshot window would be reclaimed too — their
+    * stages would recompute (correctness unaffected); this operator
+    * assumes the serial batch context it runs in.
     *
     * `refine` (default identity) runs INSIDE each slice, on the raw
     * (suppressed) occurrence stream BEFORE any pair exchange — the r11
@@ -888,68 +911,6 @@ object Dedup {
     * be BLIND to occurrence multiplicity — a pair colliding in several
     * bands of a slice reaches refine once per unsuppressed collision
     * run, and its refined rows must be identical every time. */
-  /** Receipt hook for scale tooling ONLY (graft.tools.ScaleBench): when
-    * non-null, called after each band-group slice materializes with
-    * (sliceIdx, slicesTotal, sliceSec, freshPairs). Production paths
-    * never set it; reading freshPairs costs one extra parquet count per
-    * slice, so the count is taken only when the hook is installed. */
-  @volatile private[graft] var sliceReceiptHook: (Int, Int, Double, Long) => Unit = null
-
-  /** Receipt-only slice cap for TIME-BOXED scale runs: the sliced loop
-    * stops after this many slices. The truncated union is NOT the full
-    * answer — this exists solely so a past-envelope rung can commit its
-    * measured per-slice time/disk profile without paying the whole
-    * multi-hour single-node job. Production paths never set it. */
-  @volatile private[graft] var sliceLimitForReceipts: Int = Int.MaxValue
-
-  /** Persistent slice directory for RESUMABLE scale runs (tooling only,
-    * like the two knobs above): when non-null the sliced loop writes its
-    * per-slice answer parquet under this path instead of an ephemeral
-    * temp dir, skips any slice whose parquet already committed (its
-    * `_SUCCESS` marker exists), and leaves the directory on disk when it
-    * returns — so a multi-hour past-envelope rung that dies (or is
-    * time-boxed) resumes at the first unfinished slice instead of
-    * re-paying the finished ones. A `manifest` file pins the slicing
-    * geometry (bands, rows, bandsPerSlice, nDocs): bandsPerSlice derives
-    * from MEASURED free disk, which changes between invocations as the
-    * accumulated answer parquet itself consumes space, so a resume
-    * recomputes different slice boundaries unless the first run's
-    * geometry is authoritative. A manifest that disagrees on
-    * bands/rows/nDocs fails fast — mixing boundaries would silently
-    * drop or duplicate band ranges. Production paths never set this. */
-  @volatile private[graft] var slicePersistDir: String = null
-
-  /** (computed, resumed, total) slice counts of the LAST sliced run —
-    * written by [[lshCandidatePairsSliced]] when it takes the sliced
-    * branch (null when the envelope held and no slicing happened). Lets
-    * tooling (ScaleBench) decide rung completion from what the loop
-    * ACTUALLY did — a fully-resumed run has zero receipts but
-    * computed+resumed == total — instead of inferring it from the env
-    * slice budget (the r16 `>= 999` magic number, ADVICE r16). */
-  @volatile private[graft] var lastSliceRun: (Int, Int, Int) = null
-
-  /** ONE band-group slice's candidate pairs, computed independently of
-    * every other slice: banded signatures for bands [lo, hi) (with the
-    * run-start suppression predicate evaluated against the GLOBAL band
-    * index, so a collision run that started before `lo` emits nothing
-    * here — its start slice owns the emission), the caller's refine per
-    * occurrence, then a post-exchange distinct. Slices are therefore
-    * independent jobs whose union-distinct equals the sequential sliced
-    * result — asserted in OperatorsSpec ("band slices are independent"). */
-  private[graft] def sliceCandidatePairsOnce(sets: DataFrame, bands: Int,
-      rows: Int, lo: Int, hi: Int, parts: Int,
-      refine: DataFrame => DataFrame = identity): DataFrame = {
-    import sets.sparkSession.implicits._
-    val keyed = bandedSignaturesSlice(sets, bands, rows, lo, hi)
-      .repartition(parts, $"band", $"bh")
-    val occurrences = keyed.as("a").hint("shuffle_hash").join(keyed.as("b"),
-        $"a.band" === $"b.band" && $"a.bh" === $"b.bh" &&
-          $"a.doc_id" < $"b.doc_id" &&
-          ($"a.band" === 0 || $"a.bhp" =!= $"b.bhp"))
-      .select($"a.doc_id".as("d1"), $"b.doc_id".as("d2"))
-    dedupPairs(refine(occurrences), parts, "d1", "d2")
-  }
-
   private[graft] def lshCandidatePairsSliced(sets: DataFrame, bands: Int,
       rows: Int, maxBandedRows: Long,
       refine: DataFrame => DataFrame = identity,
@@ -958,7 +919,6 @@ object Dedup {
     // callers that already counted their cached sets pass it in —
     // re-counting here would be one extra cached-scan job per operator
     val nDocs = if (nDocsKnown >= 0L) nDocsKnown else sets.count()
-    lastSliceRun = null // stale state from a prior sliced run must not leak
     if (nDocs * bands <= maxBandedRows) {
       val banded = bandedSignatures(sets, bands, rows)
       // banded rows = nDocs * bands EXACTLY (posexplode emits `bands` rows
@@ -986,40 +946,12 @@ object Dedup {
     } else {
       val spark = sets.sparkSession
       val sc = spark.sparkContext
-      val persist = slicePersistDir
-      val spillDir = if (persist != null) {
-        val p = java.nio.file.Paths.get(persist).toAbsolutePath
-        java.nio.file.Files.createDirectories(p)
-        p
-      } else java.nio.file.Files
+      val spillDir = java.nio.file.Files
         .createTempDirectory("graft-lsh-slices-").toAbsolutePath
-      // geometry: from the manifest when resuming a persistent run (the
-      // first invocation's measured-disk envelope is authoritative — see
-      // slicePersistDir), freshly derived otherwise
-      val manifestPath = spillDir.resolve("manifest")
-      val bandsPerSlice: Int =
-        if (persist != null && java.nio.file.Files.exists(manifestPath)) {
-          val kv = java.nio.file.Files.readAllLines(manifestPath)
-            .toArray(Array.empty[String])
-            .map(_.split("=", 2)).collect { case Array(k, v) => k -> v.toLong }
-            .toMap
-          require(kv("bands") == bands && kv("rows") == rows &&
-              kv("nDocs") == nDocs,
-            s"slice manifest at $manifestPath pins geometry " +
-              s"(bands=${kv("bands")},rows=${kv("rows")},nDocs=${kv("nDocs")}) " +
-              s"incompatible with this run (bands=$bands,rows=$rows,nDocs=$nDocs)")
-          kv("bandsPerSlice").toInt
-        } else {
-          val bps = math.max(1, (maxBandedRows / math.max(1L, nDocs)).toInt)
-          if (persist != null)
-            java.nio.file.Files.writeString(manifestPath,
-              s"bands=$bands\nrows=$rows\nbandsPerSlice=$bps\nnDocs=$nDocs\n")
-          bps
-        }
+      val bandsPerSlice = math.max(1, (maxBandedRows / math.max(1L, nDocs)).toInt)
       val sliceRows = nDocs * bandsPerSlice
       val parts = math.max(sc.defaultParallelism,
         math.min(4096, (sliceRows / BandJoinRowsPerPartition).toInt + 1))
-      val sliceStarts = (0 until bands by bandsPerSlice).toSeq
       // ids "seen" stay seen after their cleanup — Spark never reuses a
       // shuffle id, so the running snapshot is monotone
       var seen = org.apache.spark.GraftSparkInternals.registeredShuffleIds(sc)
@@ -1047,48 +979,25 @@ object Dedup {
         //      pairs, so the spill directory is the answer set exactly
         //      once (not answer x slices-hit) and no end-of-loop
         //      dedup exchange over the whole spill exists.
-        val seenDir = s"$spillDir/seen"
-        var nSlices = 0
-        var nResumed = 0
-        def seenPaths: Seq[String] = (0 until nSlices).map(i => s"$seenDir/s$i")
-        val hook = sliceReceiptHook
-        sliceStarts.take(if (hook != null) sliceLimitForReceipts else Int.MaxValue)
-          .foreach { lo =>
+        val seenPaths = (0 until bands by bandsPerSlice)
+          .foldLeft(Vector.empty[String]) { (done, lo) =>
             val hi = math.min(bands, lo + bandsPerSlice)
-            // a slice already committed by a prior invocation of a
-            // persistent run (parquet _SUCCESS marker) is reused as-is:
-            // its content depends only on the manifest-pinned geometry
-            // and the deterministic band range [lo, hi), both identical
-            // across invocations. No receipt fires for it — its timing
-            // belongs to the run that paid it.
-            val resumed = persist != null && java.nio.file.Files.exists(
-              java.nio.file.Paths.get(s"$seenDir/s$nSlices", "_SUCCESS"))
-            if (resumed) {
-              nSlices += 1
-              nResumed += 1
-            } else {
-              val t0 = System.nanoTime()
-              val sliceDistinct =
-                sliceCandidatePairsOnce(sets, bands, rows, lo, hi, parts, refine)
-              val fresh = if (nSlices == 0) sliceDistinct
-                else sliceDistinct.join(
-                  spark.read.parquet(seenPaths: _*).select($"d1", $"d2"),
-                  Seq("d1", "d2"), "left_anti")
-              fresh.write.mode("overwrite") // the slice executes HERE, bounded
-                .parquet(s"$seenDir/s$nSlices")
-              nSlices += 1
-              if (hook != null)
-                hook(nSlices, sliceStarts.size, (System.nanoTime() - t0) / 1e9,
-                  spark.read.parquet(s"$seenDir/s${nSlices - 1}").count())
-              // the slice's shuffles are dead (its only product is now
-              // parquet) — release their files before the next slice writes
-              val now = org.apache.spark.GraftSparkInternals.registeredShuffleIds(sc)
-              org.apache.spark.GraftSparkInternals.cleanupShufflesBlocking(sc, now -- seen)
-              seen ++= now
-            }
+            val sliceDistinct =
+              sliceCandidatePairsOnce(sets, bands, rows, lo, hi, parts, refine)
+            val fresh = if (done.isEmpty) sliceDistinct
+              else sliceDistinct.join(
+                spark.read.parquet(done: _*).select($"d1", $"d2"),
+                Seq("d1", "d2"), "left_anti")
+            val path = s"$spillDir/s${done.size}"
+            fresh.write.parquet(path) // the slice executes HERE, bounded
+            // the slice's shuffles are dead (its only product is now
+            // parquet) — release their files before the next slice writes
+            val now = org.apache.spark.GraftSparkInternals.registeredShuffleIds(sc)
+            org.apache.spark.GraftSparkInternals.cleanupShufflesBlocking(sc, now -- seen)
+            seen ++= now
+            done :+ path
           }
-        lastSliceRun = (nSlices - nResumed, nResumed, sliceStarts.size)
-        // the seen directory is globally distinct by construction; eager
+        // the spill is globally distinct by construction; eager
         // checkpoint so the spill dir can be deleted before returning
         val all = spark.read.parquet(seenPaths: _*).localCheckpoint()
         val now = org.apache.spark.GraftSparkInternals.registeredShuffleIds(sc)
@@ -1096,9 +1005,7 @@ object Dedup {
         all
       } finally {
         // best-effort recursive delete; the final pair set no longer
-        // reads from here (checkpointed above). Persistent runs keep the
-        // directory — resumability is its whole point; the tooling that
-        // set slicePersistDir owns the cleanup.
+        // reads from here (checkpointed above)
         def rm(p: java.nio.file.Path): Unit = {
           if (java.nio.file.Files.isDirectory(p)) {
             val s = java.nio.file.Files.list(p)
@@ -1107,7 +1014,7 @@ object Dedup {
           try java.nio.file.Files.deleteIfExists(p)
           catch { case _: java.io.IOException => () }
         }
-        if (persist == null) rm(spillDir)
+        rm(spillDir)
       }
     }
   }
@@ -1203,7 +1110,7 @@ object Dedup {
     // threshold (HALF_UP rounding moves a value by < 5e-7), so the cheap
     // raw-double compare prunes ~all pairs before the expensive rounded
     // compare — Catalyst's Round on DoubleType allocates a BigDecimal per
-    // evaluation (measured ~0.8 us/pair, r18 PerfProbe: the 2M-pair filter
+    // evaluation (measured ~0.8 us/pair in r18: the 2M-pair filter
     // was 1.26 s raw vs 2.92 s rounded). The rounded filter still decides
     // every boundary pair, so results are bit-identical.
     e.as("a").join(e.as("b"), $"a.vec_id" < $"b.vec_id")
@@ -1214,17 +1121,6 @@ object Dedup {
       .select($"a.vec_id".as("v1"), $"b.vec_id".as("v2"), $"cos")
   }
 
-  /** The PRODUCTION shape of embedding near-dup ([[embeddingCosinePairs]]
-    * is the all-pairs oracle anchor): multi-table random-hyperplane
-    * sign-LSH buckets front the exact cosine check — a pair is a candidate
-    * iff it shares a bucket in ANY table, so the join is an equi-join on
-    * (table, bucket) with O(vectors * tables) shuffle instead of an
-    * O(n^2) BNLJ. Approximate by construction: per-table collision
-    * probability for angle theta is (1 - theta/pi)^nBits, so recall is
-    * tuned by (nBits, nTables) — at cos >= 0.45 the defaults give ~0.8,
-    * rising steeply for the truly-near pairs a dedup pass cares about
-    * (cos 0.9 -> ~0.99). Recall vs the exact baseline is asserted in the
-    * spec, mirroring [[Similarity.lshTopK]]. */
   /** [[embeddingCosinePairsLsh]] at the corpus-sized operating point.
     *
     * Sign-LSH bucket occupancy is n/2^nBits per table: holding nBits
@@ -1301,8 +1197,32 @@ object Dedup {
       math.ceil(nSigBits * p + 2.0 * math.sqrt(nSigBits * p * (1 - p))).toInt)
   }
 
-  /** q34_lsh — banded sign-LSH near-dup pairs with the staged Hamming
-    * verify.
+  /** The eagerly-materialized (vec_id, normalized vector) frame every
+    * embedding operator starts from — factored out (r19) so the _auto
+    * twins can derive their operating point from its cached count
+    * instead of paying a second scan+normalize job. */
+  private def normalizedEmbeddings(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    embeddings(s, dir)
+      .select($"vec_id".cast("long").as("vec_id"),
+        Similarity.normalized($"embedding").as("nv"))
+      .localCheckpoint()
+  }
+
+  /** The PRODUCTION shape of embedding near-dup ([[embeddingCosinePairs]]
+    * is the all-pairs oracle anchor): multi-table random-hyperplane
+    * sign-LSH buckets front the exact cosine check — a pair is a candidate
+    * iff it shares a bucket in ANY table, so the join is an equi-join on
+    * (table, bucket) with O(vectors * tables) shuffle instead of an
+    * O(n^2) BNLJ. Approximate by construction: per-table collision
+    * probability for angle theta is (1 - theta/pi)^nBits, so recall is
+    * tuned by (nBits, nTables) — at cos >= 0.45 the defaults give ~0.8,
+    * rising steeply for the truly-near pairs a dedup pass cares about
+    * (cos 0.9 -> ~0.99). Recall vs the exact baseline is asserted in the
+    * spec, mirroring [[Similarity.lshTopK]].
+    *
+    * Registered as q34_lsh_embedding_pairs, with the staged Hamming
+    * verify inside the band join.
     *
     * BEHAVIOR CHANGE (r11, applies to the registered
     * q34_lsh_embedding_pairs / q45_lsh_embedding_clusters and the _auto
@@ -1316,18 +1236,6 @@ object Dedup {
     * boundary should use the exact anchor (q34/q45) — the tradeoff buys
     * the answer-mass-shaped vector fetch that keeps the 100x rung on
     * disk (SCALE.json). */
-  /** The eagerly-materialized (vec_id, normalized vector) frame every
-    * embedding operator starts from — factored out (r19) so the _auto
-    * twins can derive their operating point from its cached count
-    * instead of paying a second scan+normalize job. */
-  private def normalizedEmbeddings(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    embeddings(s, dir)
-      .select($"vec_id".cast("long").as("vec_id"),
-        Similarity.normalized($"embedding").as("nv"))
-      .localCheckpoint()
-  }
-
   def embeddingCosinePairsLsh(s: SparkSession, dir: String,
       threshold: Double = 0.45, dim: Int = 64,
       nBits: Int = 4, nTables: Int = 8): DataFrame = {

@@ -4,7 +4,6 @@ import java.net.InetSocketAddress
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -59,19 +58,6 @@ object ComposedSinksBench {
     def stop(): Unit = { server.stop(0); pool.shutdownNow() }
   }
 
-  private final class MetricsListener extends SparkListener {
-    @volatile var spillDisk = 0L
-    @volatile var shuffleWrite = 0L
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        spillDisk += m.diskBytesSpilled
-        shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-      }
-    }
-    def reset(): Unit = { spillDisk = 0L; shuffleWrite = 0L }
-  }
-
   def main(args: Array[String]): Unit = {
     val nFresh = if (args.length > 0) args(0).toInt else 100000
     val nUpdate = if (args.length > 1) args(1).toInt else 2000
@@ -85,8 +71,7 @@ object ComposedSinksBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val listener = graft.obs.StageMetrics.on(spark.sparkContext)
 
     val work = java.nio.file.Files.createTempDirectory("graft_composed")
     // batch CSVs: generation stays OUTSIDE the timed region, and the run

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** r19 floor-decomposition probe (VERDICT r18 "Next round" #9): the bench
@@ -20,7 +19,11 @@ import org.apache.spark.sql.SparkSession
   *   jobs/stages — Spark job + stage counts of exec1 (AQE stage
   *               scheduling rounds).
   *
-  * Tooling only — never a query path. */
+  * The repo's one per-query profiling main. Tooling only — never a
+  * query path.
+  *
+  *   runMain graft.tools.FloorProbe [sfDir] [q1,q2,...]
+  *   (local[SPARK_GRAFT_CPUS], default: the host's core count) */
 object FloorProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -32,7 +35,8 @@ object FloorProbe {
         "q38_token_count", "q41_binary_meta", "q46_hash_sample",
         "q47_vocab_topk", "q53_corpus_stats", "q58_unigram_logprob",
         "q59_sequence_packing")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
@@ -41,12 +45,7 @@ object FloorProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages += 1
-    })
+    val metrics = graft.obs.StageMetrics.on(spark.sparkContext)
 
     def clearStorage(): Unit = {
       spark.sharedState.cacheManager.clearCache()
@@ -66,7 +65,7 @@ object FloorProbe {
       val fn = graft.SparkEntry.queries(name)
       clearStorage()
       org.apache.spark.GraftSparkInternals.drainListenerBus(spark.sparkContext)
-      jobs = 0; stages = 0
+      metrics.reset()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val t1 = System.nanoTime()
@@ -75,7 +74,7 @@ object FloorProbe {
       df.queryExecution.executedPlan.execute().count()
       val t3 = System.nanoTime()
       org.apache.spark.GraftSparkInternals.drainListenerBus(spark.sparkContext)
-      val (j1, s1) = (jobs, stages)
+      val (j1, s1) = (metrics.jobs, metrics.stages)
       // steady-state: fresh construction, warm session
       clearStorage()
       val t4 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -110,47 +109,23 @@ object ScaleBench {
     * WRITTEN cumulatively, not what's simultaneously live). */
   private class DiskSampler(dir: java.io.File) extends Thread {
     @volatile var minFree: Long = Long.MaxValue
-    // SEPARATE per-slice watermark: the q22x100 hook needs a per-slice
-    // peak without resetting the section-level one (r15 bug: the hook
-    // called peakUsed(mark()), which both reported identically 0 for
-    // every slice AND reset the shared watermark so the section peak
-    // only saw dips after the last hook)
-    @volatile var minFreeSlice: Long = Long.MaxValue
     @volatile private var live = true
     setDaemon(true)
     override def run(): Unit = while (live) {
-      val f = dir.getUsableSpace
-      minFree = math.min(minFree, f)
-      minFreeSlice = math.min(minFreeSlice, f)
+      minFree = math.min(minFree, dir.getUsableSpace)
       Thread.sleep(500)
     }
     /** Reset the watermark; returns free space now. */
     def mark(): Long = { val f = dir.getUsableSpace; minFree = f; f }
     def peakUsed(base: Long): Long = math.max(0L, base - minFree)
-    /** Reset ONLY the slice watermark; returns free space now. */
-    def markSlice(): Long = { val f = dir.getUsableSpace; minFreeSlice = f; f }
-    def peakUsedSlice(base: Long): Long = math.max(0L, base - minFreeSlice)
     def shutdown(): Unit = live = false
-  }
-
-  private class MetricsListener extends SparkListener {
-    @volatile var spillDisk = 0L
-    @volatile var shuffleWrite = 0L
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        spillDisk += m.diskBytesSpilled
-        shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-      }
-    }
-    def reset(): Unit = { spillDisk = 0L; shuffleWrite = 0L }
   }
 
   def main(args: Array[String]): Unit = {
     val factors = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 10)
     // partial re-measure support: SPARK_GRAFT_OPS=q61_substring_dedup,...
-    // runs only the named chain ops (and skips the ivf/q22x100 sections
-    // unless named 'ivf_index'), so one fixed rung doesn't cost a full
+    // runs only the named chain ops (and skips the ivf section unless
+    // named 'ivf_index'), so one fixed rung doesn't cost a full
     // 2.5 h ladder re-run; the merged artifact's _note names invocations
     val opsFilter: Set[String] = sys.env.get("SPARK_GRAFT_OPS")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty)
@@ -182,8 +157,7 @@ object ScaleBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val listener = graft.obs.StageMetrics.on(spark.sparkContext)
     val sampler = new DiskSampler(new java.io.File(
       System.getProperty("java.io.tmpdir", "/tmp")))
     sampler.start()
@@ -286,9 +260,9 @@ object ScaleBench {
     out ++= s"""{"metric":"scale_bench","cpus":$cpus,"scales":{"""
     // generators are seed-fixed, so a rung's input corpus is reusable
     // byte-for-byte across invocations — SPARK_GRAFT_REUSE_DATA=1 skips
-    // regeneration when every table already committed (a resumed x100
-    // invocation must NOT regenerate: identical content, but fresh files
-    // would waste ~10 min of driver-side generation per rung)
+    // regeneration when every table already committed (a partial
+    // re-measure need not regenerate: identical content, but fresh files
+    // would waste ~10 min of driver-side generation per x100 rung)
     val reuseData = sys.env.getOrElse("SPARK_GRAFT_REUSE_DATA", "0") == "1"
     def committed(path: String): Boolean =
       java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS"))
@@ -346,8 +320,8 @@ object ScaleBench {
     // build once (the only full-corpus shuffle), probe via broadcast
     // probe-list + DPP-pruned partition scan, append without rebuild.
     // This measures all three phases at the top rung and captures the
-    // executed probe plan's dynamic-pruning receipt (PlanProbe's check,
-    // as a committed number instead of an eyeballed plan dump).
+    // executed probe plan's dynamic-pruning receipt (a committed number
+    // instead of an eyeballed plan dump).
     if (opsFilter.isEmpty || opsFilter.contains("ivf_index")) {
       import org.apache.spark.sql.functions._
       import graft.operators.{IvfIndex, Similarity}
@@ -422,90 +396,6 @@ object ScaleBench {
         s""""append_sec":$appendSec},"""
     }
 
-    // ---- q22_auto past-envelope receipt (x100) -------------------------
-    // The x100 fuzzy-match rung is a measured ~2.5h+ single-node job
-    // (quadratic answer mass — see q22_auto_account below), so the full
-    // ladder stops it at x30. This section runs the FIRST
-    // SPARK_GRAFT_Q22X100_SLICES band-group slices of the x100 point
-    // under the shipped code and records each slice's wall-time, fresh
-    // (post cross-slice dedup) pair count, and peak disk. When the slice
-    // budget covers every slice and the run finishes, the receipt is the
-    // COMPLETE measured rung (timeboxed:false) and the projection object
-    // is dropped from the account — measured replaces projected. With
-    // SPARK_GRAFT_SLICE_DIR set, the per-slice parquet persists there and
-    // a re-invocation resumes at the first unfinished slice
-    // (Dedup.slicePersistDir). 0 (default) skips the section.
-    val q22x100Slices = sys.env.getOrElse("SPARK_GRAFT_Q22X100_SLICES", "0").toInt
-    var q22x100Complete = false
-    val q22x100Json: String = if (q22x100Slices > 0 && factors.contains(100) &&
-        (opsFilter.isEmpty || opsFilter.contains("q22_lsh_match_score_auto"))) {
-      import graft.operators.Dedup
-      val dir100 = s"/tmp/graft_scale/x100"
-      val receipts = new scala.collection.mutable.ArrayBuffer[(Int, Int, Double, Long, Long)]
-      clearStorage(); listener.reset()
-      val baseFree = sampler.mark()
-      var sliceBase = sampler.markSlice()
-      Dedup.sliceReceiptHook = (idx, total, sec, fresh) => {
-        // per-slice peak from the SLICE watermark (leaves the section
-        // watermark alone — the r15 hook zeroed both receipts, ADVICE r15)
-        val peak = sampler.peakUsedSlice(sliceBase)
-        sliceBase = sampler.markSlice()
-        receipts += ((idx, total, sec, fresh, peak))
-        System.err.println(s"[scale] q22x100 slice $idx/$total: ${sec}s, $fresh fresh pairs")
-      }
-      Dedup.sliceLimitForReceipts = q22x100Slices
-      Dedup.slicePersistDir = sys.env.getOrElse("SPARK_GRAFT_SLICE_DIR", null)
-      val t0 = System.nanoTime()
-      val rows = try
-        graft.operators.TextQueries.q22LshMatchScoreAuto(spark, dir100).count()
-      catch { case e: Throwable =>
-        System.err.println(s"[scale] q22x100 sliced run failed: $e"); -1L
-      } finally {
-        Dedup.sliceReceiptHook = null
-        Dedup.sliceLimitForReceipts = Int.MaxValue
-        Dedup.slicePersistDir = null
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.GraftSparkInternals.drainListenerBus(spark.sparkContext)
-      // complete iff the run returned AND the loop itself reports every
-      // slice accounted for (computed this run + resumed from prior
-      // invocations == total). State, not the env budget: the r16 shape
-      // inferred a fully-resumed completion from `slices >= 999`, which
-      // mislabeled a resumed run launched with the exact slice count as
-      // budget (ADVICE r16). A null sliceRun after a SUCCESSFUL run means
-      // the envelope held and no slicing happened — that IS a complete
-      // answer, not a timebox (ADVICE r17: the old `!= null` requirement
-      // mislabeled the envelope branch as timeboxed).
-      val sliceRun = Dedup.lastSliceRun
-      q22x100Complete = rows >= 0 && (sliceRun == null ||
-        sliceRun._1 + sliceRun._2 == sliceRun._3)
-      val perSlice = receipts.map { case (i, tot, s, fr, pk) =>
-        s"""{"slice":$i,"of":$tot,"sec":$s,"fresh_pairs":$fr,"peak_disk_used":$pk}"""
-      }.mkString(",")
-      s""""x100_sliced":{"timeboxed":${!q22x100Complete},""" +
-        s""""envelope_held":${rows >= 0 && sliceRun == null},""" +
-        s""""slices_computed_this_run":${receipts.size},""" +
-        s""""slices_resumed":${if (sliceRun != null) sliceRun._2 else -1},""" +
-        s""""slices_total":${if (sliceRun != null) sliceRun._3
-          else receipts.headOption.map(_._2).getOrElse(-1)},""" +
-        s""""total_sec":$sec,"rows":$rows,""" +
-        s""""spill_disk":${listener.spillDisk},""" +
-        s""""peak_disk_used":${sampler.peakUsed(baseFree)},""" +
-        s""""per_slice":[$perSlice]},"""
-    } else ""
-
-    // structured q22_auto account (r15: was _note prose) — the numbers a
-    // round-over-round diff needs, machine-readable. The x100 projection
-    // exists only until a completed x100_sliced receipt replaces it.
-    val projection = if (q22x100Complete) "" else
-      """"x100_projection":{"scored_pairs":460000000,"bands":1082,""" +
-      """"raw_candidate_occurrences":20500000000,"verified_emissions_per_sec":4000000,""" +
-      """"single_node_estimate_sec":7200},"""
-    out ++= s""""q22_auto_account":{$q22x100Json""" +
-      """"answer_pairs_measured":{"x1":45861,"x10":4588720,"x30":41235016,"x100":458673104},""" +
-      """"answer_growth":"quadratic in corpus (generator's fuzzy answer mass)",""" +
-      projection +
-      """"slices_are_independent_jobs":"certified TWICE: in-JVM (OperatorsSpec 'band slices are independent jobs') and across two SEPARATE concurrent JVMs (SLICE_JOBS.json — distinct pids, no shared SparkSession, union-distinct == sequential in both directions, 0 missing / 0 spurious); the shipped single-node loop runs them as sequential bounded rounds with an incremental anti-join so peak disk stays one slice's exchange + the answer exactly once"},"""
     // structured embedding-auto account (r17, VERDICT r16 ask #2): the
     // q34/q45 auto time ratios at 100x data (249.2 / 64.05) need a
     // denominator. q34_lsh_auto's OUTPUT rows ARE its answer pairs, so
@@ -572,10 +462,10 @@ object ScaleBench {
       "first-collision suppression + in-slice broadcast Jaccard verify + " +
       "incremental cross-slice anti-join + synchronous shuffle reclamation " +
       "keep each slice answer-shaped, and the pair set is exact by the " +
-      "per-band union law) — the x100 rung itself is the COMPLETED " +
-      "9/9-slice receipt in q22_auto_account.x100_sliced (r16: 7010.8s, " +
-      "458.7M scored pairs, zero spill, measured per-slice peaks), run " +
-      "via the resumable persistent slice dir. " +
+      "per-band union law). This harness no longer runs q22_auto's x100 " +
+      "point; a merged SCALE.json keeps the r16 9/9-slice x100 receipt " +
+      "(q22_auto_account.x100_sliced: 7010.8s, 458.7M scored pairs, zero " +
+      "spill) from an earlier, since-removed resumable-slice section. " +
       "q34_lsh_auto/q45_lsh_auto run the full ladder zero-spill since r11, " +
       "via three staged-verify fixes: (1) Hamming prune on a 128 B packed " +
       "sign signature INSIDE the band join (r10 fetched full vectors per " +

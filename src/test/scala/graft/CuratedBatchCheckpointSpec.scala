@@ -2,14 +2,13 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.GraftSparkInternals
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.curation.{CurationBench, Curator, MetaProcess, Validation}
+import graft.obs.StageMetrics
 import graft.rdf.{Provenance, TriplesEmitter}
 
 /** `CuratedBatch.checkpointed` checkpoints each frame on its first read:
@@ -41,21 +40,15 @@ class CuratedBatchCheckpointSpec extends AnyFunSuite {
     p.toString
   }
 
-  private lazy val jobStarts: AtomicInteger = {
-    val n = new AtomicInteger
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    })
-    n
-  }
+  private lazy val metrics: StageMetrics = StageMetrics.on(spark.sparkContext)
 
   /** Spark jobs started while evaluating `body`. */
-  private def jobsOf[T](body: => T): (T, Int) = {
+  private def jobsOf[T](body: => T): (T, Long) = {
     GraftSparkInternals.drainListenerBus(spark.sparkContext)
-    val before = jobStarts.get
+    val before = metrics.jobs
     val r = body
     GraftSparkInternals.drainListenerBus(spark.sparkContext)
-    (r, jobStarts.get - before)
+    (r, metrics.jobs - before)
   }
 
   private def allFrames(b: Curator.CuratedBatch): Seq[DataFrame] =

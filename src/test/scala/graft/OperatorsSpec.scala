@@ -108,73 +108,6 @@ class OperatorsSpec extends AnyFunSuite {
       "no new plan node may be added when the scan is already split")
   }
 
-  test("persistent slice dir: a time-boxed run resumes at the first unfinished slice") {
-    import org.apache.spark.sql.functions._
-    // certifies Dedup.slicePersistDir (the resumable-rung knob): phase 1
-    // is cut off after 3 of 7 slices; phase 2 re-invokes with the same
-    // persist dir and must (a) recompute NOTHING it already committed,
-    // (b) take its slice geometry from the manifest even when the
-    // fresh-disk envelope would slice differently, and (c) return the
-    // exact pair set of an uninterrupted run
-    val sets = graft.Tables.documents(spark, dir)
-      .select(col("doc_id").cast("long").as("doc_id"),
-        Dedup.shingleHashes(col("text"), 5).as("hv"))
-      .filter(size(col("hv")) > 0)
-      .cache()
-    val n = sets.count()
-    val (bands, rows) = (32, 4)
-    val expected = Dedup.lshCandidatePairsSliced(sets, bands, rows, n * 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(expected.nonEmpty)
-    val persistDir = java.nio.file.Files.createTempDirectory("graft-resume-spec-")
-    val computed = new scala.collection.mutable.ArrayBuffer[(Int, Int)]
-    def runPersisted(maxBandedRows: Long, limit: Int): Set[(Long, Long)] = {
-      Dedup.slicePersistDir = persistDir.toString
-      Dedup.sliceLimitForReceipts = limit
-      Dedup.sliceReceiptHook = (i, tot, _, _) => computed.synchronized {
-        computed += ((i, tot)) }
-      try Dedup.lshCandidatePairsSliced(sets, bands, rows, maxBandedRows)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      finally {
-        Dedup.slicePersistDir = null
-        Dedup.sliceLimitForReceipts = Int.MaxValue
-        Dedup.sliceReceiptHook = null
-      }
-    }
-    try {
-      val truncated = runPersisted(n * 5, limit = 3) // 7 slices of 5 bands; stop at 3
-      assert(computed.toSeq == Seq((1, 7), (2, 7), (3, 7)))
-      // NOT asserted strict: on this corpus nearly every colliding pair
-      // first-collides in band 0, so 3 slices can already hold the full
-      // answer — the resume guarantees below are the point of the spec
-      assert(truncated.nonEmpty && truncated.subsetOf(expected))
-      computed.clear()
-      // resume under a DIFFERENT fresh envelope (n*3 would slice 11 ways)
-      // — the manifest's 5-band geometry must win, so exactly slices 4-7
-      // are computed and the union equals the uninterrupted run
-      val resumed = runPersisted(n * 3, limit = Int.MaxValue)
-      assert(computed.toSeq == Seq((4, 7), (5, 7), (6, 7), (7, 7)),
-        s"resume must compute only the unfinished slices (got $computed)")
-      assert(resumed == expected)
-      // incompatible geometry (different band count) must fail fast, not
-      // silently mix slice boundaries
-      Dedup.slicePersistDir = persistDir.toString
-      try intercept[IllegalArgumentException] {
-        Dedup.lshCandidatePairsSliced(sets, 16, rows, n * 3).count()
-      } finally Dedup.slicePersistDir = null
-    } finally {
-      def rm(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p)) {
-          val s = java.nio.file.Files.list(p)
-          try s.forEach(rm(_)) finally s.close()
-        }
-        java.nio.file.Files.deleteIfExists(p)
-      }
-      rm(persistDir)
-      sets.unpersist()
-    }
-  }
-
   test("blocking shuffle cleanup releases exactly the snapshot-diff ids") {
     import org.apache.spark.GraftSparkInternals
     import org.apache.spark.sql.functions.col

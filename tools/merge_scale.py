@@ -2,21 +2,17 @@
 """Merge a partial ScaleBench artifact into the committed SCALE.json.
 
 SCALE.json is assembled from MULTIPLE invocations (full ladder + partial
-re-runs via SPARK_GRAFT_OPS + the resumable x100 q22 section): a fresh
-partial run must update only the rungs it actually measured, never
-clobber rungs it skipped. This script is that discipline as code:
+re-runs via SPARK_GRAFT_OPS): a fresh partial run must update only the
+rungs it actually measured, never clobber rungs it skipped. This script
+is that discipline as code:
 
   python3 tools/merge_scale.py SCALE.json fresh.json "note about the invocation"
 
 - scales.xN.<op> rows present in fresh replace the committed ones;
   absent ones are left untouched (a partial run writes empty rungs).
 - time_ratio entries present in fresh replace committed ones.
-- q22_auto_account: replaced wholesale IF fresh ran the x100 section
-  (its x100_sliced/x100_timeboxed key present) — EXCEPT that a
-  timeboxed/partial fresh section never overwrites a committed COMPLETE
-  (timeboxed:false) receipt unless --force is passed: a later partial
-  invocation clobbering the 9/9 measured rung is the exact regression
-  the projection key caused once (ADVICE r16).
+- q22_auto_account (the r16 x100 receipt) is kept as committed:
+  ScaleBench does not emit it.
 - ivf_index: replaced if present in fresh.
 - embedding_auto_account: replaced if present in fresh.
 - The invocation note is appended to _merge_log (a list), so every
@@ -27,9 +23,7 @@ import sys
 
 
 def main():
-    force = "--force" in sys.argv
-    argv = [a for a in sys.argv if a != "--force"]
-    base_path, fresh_path, note = argv[1], argv[2], argv[3]
+    base_path, fresh_path, note = sys.argv[1], sys.argv[2], sys.argv[3]
     with open(base_path) as f:
         base = json.load(f)
     with open(fresh_path) as f:
@@ -41,23 +35,6 @@ def main():
         base.setdefault("scales", {}).setdefault(scale, {}).update(rows)
     for op, ratio in fresh.get("time_ratio", {}).items():
         base.setdefault("time_ratio", {})[op] = ratio
-    acct = fresh.get("q22_auto_account", {})
-    # only a run that actually executed the x100 SECTION may replace the
-    # account — the projection key is emitted by every invocation and
-    # must not match (it clobbered a completed receipt once)
-    if "x100_sliced" in acct or "x100_timeboxed" in acct:
-        base_complete = (
-            base.get("q22_auto_account", {})
-            .get("x100_sliced", {}).get("timeboxed") is False)
-        fresh_complete = acct.get("x100_sliced", {}).get("timeboxed") is False
-        if base_complete and not fresh_complete and not force:
-            print(
-                "REFUSED: base q22_auto_account holds a COMPLETE "
-                "(timeboxed:false) x100 receipt and fresh's is partial/"
-                "timeboxed — skipping the account merge (pass --force to "
-                "overwrite deliberately)", file=sys.stderr)
-        else:
-            base["q22_auto_account"] = acct
     if "ivf_index" in fresh:
         base["ivf_index"] = fresh["ivf_index"]
     if "embedding_auto_account" in fresh:
