@@ -197,18 +197,83 @@ object MetaProcess {
     * reference's `sort_files`). Returns the advanced state. With
     * `persistTo` set, the state is ALSO saved after every file — the
     * reference's per-file cache.txt flush — so a crash mid-queue resumes
-    * from the last completed file, not from the start of the run. */
+    * from the last completed file, not from the start of the run.
+    *
+    * A file of at most [[InterpretedMaxBytes]] runs its plans
+    * interpreted: while it is processed the session has
+    * `spark.sql.codegen.wholeStage=false` and
+    * `spark.sql.codegen.factoryMode=NO_CODEGEN`, and after it (or on a
+    * throw) both are put back as the caller had them, an unset key unset
+    * again. A file's plans are many and each runs once, so for a small
+    * file generating and compiling their code costs more than
+    * interpreting them: a 1000-record fresh file compiled about 600
+    * generated classes and an update file over 2000, and JIT compilation
+    * was most of the CPU. Both settings are needed: with whole-stage
+    * codegen off alone, expression code generation still compiles almost
+    * as many classes. `factoryMode` is an internal Spark setting;
+    * `NO_CODEGEN` selects the interpreted implementation Spark itself
+    * falls back to when a generated class fails to compile. The settings
+    * are session-wide, so queries that other threads run on the same
+    * session meanwhile run interpreted too, and the restore is not
+    * reentrant: `run` must not overlap with itself on one session, or the
+    * caller's settings can be lost. The returned frames are checkpoints:
+    * what the caller later plans on them uses the caller's own settings. */
   def run(spark: SparkSession, files: Seq[String], generatedAt: String,
       state: PipelineState = Empty, prefix: String = "060",
       persistTo: Option[String] = None,
-      sinks: Option[Sinks] = None): PipelineState = {
+      sinks: Option[Sinks] = None): PipelineState =
+    runFiles(spark, files, generatedAt, state, prefix, persistTo, sinks,
+      interpret = interprets(spark, _))
+
+  /** The largest input file [[run]] processes interpreted, about 13000
+    * synthetic records. Measured on 4 cores with every sink on: files of
+    * 1000 to 10000 records (3.2 MB), fresh or updating a store of up to
+    * 3.3M triples, took less CPU interpreted; a 100000-record fresh file
+    * (31.6 MB) took longer, since interpreting costs per row and compiling
+    * a fixed amount per plan. Files in between were not measured and keep
+    * generated code. */
+  private[graft] val InterpretedMaxBytes: Long = 4L << 20
+
+  /** Whether [[run]] processes `file` interpreted: by its size in bytes,
+    * which the file system reports without reading it. */
+  private[graft] def interprets(spark: SparkSession, file: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(file)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(p).getLength <= InterpretedMaxBytes
+  }
+
+  private val InterpretedPlans = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** `body` with [[InterpretedPlans]] set on the session. `getAll` holds
+    * only the keys that are set (`getOption` would return the default of
+    * an unset one), so an unset key is unset again afterwards. */
+  private def interpreted[T](spark: SparkSession)(body: => T): T = {
+    val set = spark.conf.getAll
+    val before = InterpretedPlans.map { case (k, _) => k -> set.get(k) }
+    InterpretedPlans.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The per-file loop of [[run]]: a file for which `interpret` holds runs
+    * [[interpreted]], any other under the session's settings as they
+    * are. */
+  private[graft] def runFiles(spark: SparkSession, files: Seq[String],
+      generatedAt: String, state: PipelineState, prefix: String,
+      persistTo: Option[String], sinks: Option[Sinks],
+      interpret: String => Boolean): PipelineState = {
     import spark.implicits._
     val sink = sinks.filter(_.enabled)
     val sinkName = sinkNames(files)
     var st = state
     for (f <- files.sorted if !st.done.contains(f)) {
       val input = Curator.readInput(spark, f)
-      st = (st.triples, st.prov) match {
+      def curate: PipelineState = (st.triples, st.prov) match {
         case (None, _) =>
           // each curated frame is checkpointed on its first read: emission
           // and provenance read the graph frames only, so the CSV rows
@@ -280,6 +345,7 @@ object MetaProcess {
         case _ =>
           throw new IllegalStateException("state has triples but no prov")
       }
+      st = if (interpret(f)) interpreted(spark)(curate) else curate
       persistTo.foreach(saveState(st, _))
     }
     st

@@ -41,16 +41,6 @@ object Sequencing {
     df.withColumn(indexName, row_number().over(w).cast(LongType) + lit(offset))
   }
 
-  /** Size-based dispatch: the lazy window variant below the threshold
-    * (cheap, folds into downstream jobs), [[globalSequenceDistributed]]
-    * above it so corpus-scale frames never funnel through a single task.
-    * Eager (counts `df`) — call on frames that are already checkpointed
-    * or cheap to recompute. */
-  def globalSequenceAuto(df: DataFrame, sortCols: Seq[Column], indexName: String,
-      offset: Long = 0L, threshold: Long = 2000000L): DataFrame =
-    if (df.count() <= threshold) globalSequence(df, sortCols, indexName, offset)
-    else globalSequenceDistributed(df, sortCols, indexName, offset)
-
   /** Distributed variant for corpus-scale inputs: range-repartition on the
     * sort key (globally ordered partitions) + RDD zipWithIndex (one
     * O(#partitions) driver round). Eager. */

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 import org.apache.spark.GraftSparkInternals
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +17,8 @@ import graft.rdf.{Provenance, TriplesEmitter}
   * frame's jobs, a second read runs none. A fresh `MetaProcess.run`, which
   * reads only the graph frames, must give the same triples, provenance and
   * counters as the eager composition over a batch whose every frame was
-  * read. Input: 50 synthetic records, no fixture outside the repo. */
+  * read, and runs its plans interpreted, compiling next to no generated
+  * code. Input: 50 synthetic records, no fixture outside the repo. */
 class CuratedBatchCheckpointSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -59,6 +61,16 @@ class CuratedBatchCheckpointSpec extends AnyFunSuite {
   private def assertSameRows(what: String, got: DataFrame, want: DataFrame): Unit = {
     assert(got.exceptAll(want).count() == 0, s"$what: rows missing from the eager run")
     assert(want.exceptAll(got).count() == 0, s"$what: rows missing from MetaProcess.run")
+  }
+
+  // first in the suite: a generated class compiled by an earlier test
+  // would be a cache hit here, not a compile
+  test("a fresh MetaProcess.run starts fewer than 50 Janino compiles") {
+    val in = inputFile
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    MetaProcess.run(spark, Seq(in), T0)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiles < 50, s"$compiles generated classes compiled")
   }
 
   test("checkpointed starts no job; a frame's first read runs its jobs, a second read none") {
